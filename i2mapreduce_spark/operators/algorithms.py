@@ -15,6 +15,7 @@ line numpy replicas with pre-round tolerance.
 from __future__ import annotations
 
 import os
+from dataclasses import replace
 
 import numpy as np
 import pandas as pd
@@ -305,45 +306,49 @@ def kcore(edges: DataFrame, k: int, max_rounds: int = 12) -> DataFrame:
     )
 
 
-def sssp(edges: DataFrame, source: int, max_hops: int = 4) -> DataFrame:
-    """Hop-limited BFS min-distance from `source` (GIM-V / iMapReduce
-    shortest-path shape): per hop, frontier ⋈ edges -> min-dist fold.
-    Monotone min-aggregation means re-visiting nodes is harmless — the
-    classic MapReduce SSSP the reference ships as an example app.
+def _bfs_hops(edges: DataFrame, seeds: DataFrame, max_hops: int,
+              by: tuple[str, ...] = ()) -> DataFrame:
+    """Hop-limited BFS min-distance from `seeds` (*by, node, dist=0):
+    per hop, frontier ⋈ edges -> min-dist fold over (*by, node).  The
+    `by` columns label independent searches that share one loop — the
+    multi-source labeled BFS, where K sources cost the same join+fold
+    rounds as one.  Returns (*by, node, dist), eagerly checkpointed.
 
     Memory hygiene (r10, same class as iterate()): each hop's eager
     checkpoint supersedes the previous one, which is released so loop
-    memory stays O(1) hops; the edge cache is dropped before returning
-    (the final dist is already materialized and no longer reads it).
+    memory stays O(1) hops; an edges frame this helper checkpointed
+    itself is dropped before returning (the final dist is already
+    materialized and no longer reads it).
 
     r12 (guide §2.3 shuffle fewer bytes): messages propagate from the
-    FRONTIER only — the nodes first reached on the previous hop (dist
-    == h), not the whole reached set.  In unweighted BFS a node's
+    FRONTIER only — the rows first reached on the previous hop (dist
+    == h), not the whole reached set.  In unweighted BFS a (label, node)
     distance is final the first time the min-fold assigns it, so a
-    non-frontier node's re-sent message can only lose to an existing
+    non-frontier row's re-sent message can only lose to an existing
     minimum: dropping those messages is result-identical while the
     per-hop join/shuffle volume falls from O(edges out of everything
     reached so far) to O(edges out of the new frontier) — on the dense
     co-purchase graph hops 3+ previously re-shipped nearly the whole
     reached subgraph every round.  An empty frontier ends the loop
     early (the remaining hops were no-ops)."""
-    dist = edges.sparkSession.createDataFrame(
-        [(source, 0)], "node long, dist int"
-    )
     edges, owned = _own_edges(edges)
+    dist = seeds
     prev = None
     try:
         for h in range(max_hops):
             frontier = dist.filter(F.col("dist") == h)
             grown = (
-                frontier.join(edges, frontier.node == edges.src)
+                frontier.alias("d")
+                .join(edges.alias("e"), F.col("d.node") == F.col("e.src"))
                 .select(
-                    edges.dst.alias("node"), (frontier.dist + 1).alias("dist")
+                    *[F.col(f"d.{c}").alias(c) for c in by],
+                    F.col("e.dst").alias("node"),
+                    (F.col("d.dist") + 1).alias("dist"),
                 )
             )
             dist = (
                 dist.union(grown)
-                .groupBy("node")
+                .groupBy(*by, "node")
                 .agg(F.min("dist").alias("dist"))
                 .transform(checkpoint_without_stats)
             )
@@ -363,6 +368,18 @@ def sssp(edges: DataFrame, source: int, max_hops: int = 4) -> DataFrame:
         if owned:
             release_checkpoint(edges)
     return dist
+
+
+def sssp(edges: DataFrame, source: int, max_hops: int = 4) -> DataFrame:
+    """Hop-limited BFS min-distance from `source` (GIM-V / iMapReduce
+    shortest-path shape): per hop, frontier ⋈ edges -> min-dist fold.
+    Monotone min-aggregation means re-visiting nodes is harmless — the
+    classic MapReduce SSSP the reference ships as an example app.
+    Returns (node, dist); the loop is `_bfs_hops`."""
+    seeds = edges.sparkSession.createDataFrame(
+        [(source, 0)], "node long, dist int"
+    )
+    return _bfs_hops(edges, seeds, max_hops)
 
 
 def gimv(
@@ -415,7 +432,8 @@ def gimv(
 
 
 def connected_components(edges: DataFrame, iters: int = 16,
-                         init_labels: DataFrame | None = None) -> DataFrame:
+                         init_labels: DataFrame | None = None
+                         ) -> IterationResult:
     """Min-label CC over symmetric edges with pointer-doubling: each round
     (1) propagates min neighbor labels (GIM-V combine2 = neighbor label,
     combineAll = min, assign = least), then (2) shortcuts label <-
@@ -433,8 +451,10 @@ def connected_components(edges: DataFrame, iters: int = 16,
     labels are monotone decreasing as components merge; deletions can
     split components, which would need a recompute of the affected
     labels, not a warm start).  Nodes absent from init_labels seed with
-    their own id.  `connected_components.last_iters_run` records the
-    rounds the call actually used.
+    their own id.
+
+    Returns the fixpoint's IterationResult with `state` = (node, label);
+    `iterations` is the rounds the call actually used.
     """
     labels = _nodes(edges).withColumn("val", F.col("node"))
     if init_labels is not None:
@@ -500,8 +520,9 @@ def connected_components(edges: DataFrame, iters: int = 16,
     finally:
         if owned:
             release_checkpoint(edges)
-    connected_components.last_iters_run = res.iterations
-    return res.state.select("node", F.col("val").alias("label"))
+    return replace(
+        res, state=res.state.select("node", F.col("val").alias("label"))
+    )
 
 
 def label_propagation(edges: DataFrame, labels0: DataFrame, iters: int = 3,
@@ -593,6 +614,14 @@ def apriori_levels(
     return levels
 
 
+def _nearest_centroid(A: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """Index of the nearest centroid (row of C) for each row of A, via
+    ||a-c||^2 = |a|^2 - 2 a.c + |c|^2; argmin ties -> lowest centroid
+    index (np.argmin returns the first minimum)."""
+    d2 = (A * A).sum(1, keepdims=True) - 2 * A @ C.T + (C * C).sum(1)
+    return d2.argmin(axis=1)
+
+
 def kmeans(
     spark: SparkSession,
     emb_df: DataFrame,
@@ -602,20 +631,21 @@ def kmeans(
     vec_col: str = "embedding",
     init_centroids: np.ndarray | None = None,
     tol: float | None = None,
-) -> tuple[DataFrame, np.ndarray]:
+) -> tuple[DataFrame, np.ndarray, int]:
     """K-means with deterministic seeding (the k smallest ids) and
     deterministic tie-break (lowest centroid id wins argmin).
 
     Assignment is an Arrow-batched kernel against broadcast centroids
     (k x dim — tiny); the centroid update aggregates per (cluster, dim)
     distributed-side, so only k*dim numbers ever reach the driver.
-    Returns (assignments DataFrame, final centroids ndarray).
+    Returns (assignments DataFrame, final centroids ndarray, iterations
+    run).
 
     `init_centroids` warm-starts from a prior model (ref op A13: seed the
     restarted loop with the previously converged state); with `tol` set
-    the loop stops once the max centroid shift falls below it, and
-    `kmeans.last_iters_run` records how many iterations ran — the
-    warm-start saving the reference demonstrates, in miniature.
+    the loop stops once the max centroid shift falls below it, so the
+    returned iteration count shows the warm-start saving the reference
+    demonstrates, in miniature.
     """
     if init_centroids is not None:
         centroids = np.asarray(init_centroids, dtype=np.float64).copy()
@@ -626,11 +656,10 @@ def kmeans(
         if not seeds:
             # empty corpus: no centroids to train, no rows to assign —
             # return the empty assignment with the declared schema
-            kmeans.last_iters_run = 0
             empty = emb_df.sparkSession.createDataFrame(
                 [], f"{id_col} long, cluster int"
             )
-            return empty, np.empty((0, 0))
+            return empty, np.empty((0, 0)), 0
         centroids = np.stack([np.asarray(r[0], dtype=np.float64) for r in seeds])
 
     def make_kernel(bc):
@@ -643,17 +672,10 @@ def kmeans(
                 if len(pdf) == 0:
                     continue
                 A = np.stack(pdf[vec_col].values).astype(np.float64)
-                # ||a-c||^2 = |a|^2 - 2 a.c + |c|^2 ; argmin ties -> lowest
-                # centroid index (np.argmin returns the first minimum)
-                d2 = (
-                    (A * A).sum(1, keepdims=True)
-                    - 2 * A @ C.T
-                    + (C * C).sum(1)
-                )
                 yield pd.DataFrame(
                     {
                         id_col: pdf[id_col].values,
-                        "cluster": d2.argmin(axis=1).astype(np.int32),
+                        "cluster": _nearest_centroid(A, C).astype(np.int32),
                     }
                 )
 
@@ -669,12 +691,7 @@ def kmeans(
                 if len(pdf) == 0:
                     continue
                 A = np.stack(pdf[vec_col].values).astype(np.float64)
-                d2 = (
-                    (A * A).sum(1, keepdims=True)
-                    - 2 * A @ C.T
-                    + (C * C).sum(1)
-                )
-                lab = d2.argmin(axis=1)
+                lab = _nearest_centroid(A, C)
                 present = np.unique(lab)
                 yield pd.DataFrame(
                     {
@@ -687,7 +704,7 @@ def kmeans(
         return partials_kernel
 
     assign = None
-    kmeans.last_iters_run = 0
+    iterations = 0
     for _ in range(iters):
         bc = spark.sparkContext.broadcast(centroids)
         assign = emb_df.select(id_col, vec_col).mapInPandas(
@@ -718,11 +735,11 @@ def kmeans(
             new_c[r.cluster] = np.asarray(r.vsum, dtype=np.float64) / r.cnt
         shift = float(np.abs(new_c - centroids).max())
         centroids = new_c
-        kmeans.last_iters_run += 1
+        iterations += 1
         if tol is not None and shift <= tol:
             break
 
-    return assign, centroids
+    return assign, centroids, iterations
 
 
 #: contracted-graph size below which Borůvka finishes with one driver
@@ -876,7 +893,7 @@ def boruvka_msf(edges: DataFrame, max_rounds: int = 8) -> DataFrame:
         )
         # iters is a safety cap only — CC exits at its true fixpoint; 16
         # pointer-doubling rounds cover pick-graph chains to depth 2^16
-        m = connected_components(pick_sym, iters=16).select(
+        m = connected_components(pick_sym, iters=16).state.select(
             F.col("node").alias("old"), F.col("label").alias("new")
         )
         # contract on component LABELS: every picked (cs, cd) pair merges

@@ -3,9 +3,10 @@
 An unpartitioned ``Window.orderBy(...)`` moves EVERY row to one task —
 the classic scale-killer Spark itself warns about ("No Partition Defined
 for Window operation").  For a unique total order the global rank is
-computable fully distributed with the chunked-offset construction the
-incremental engine already uses for deterministic event chunking
-(streaming/incremental.py:chunk_events):
+computable fully distributed with a chunked-offset construction
+(``_ranged`` below; the incremental engine's deterministic event
+chunking, streaming/incremental.py:chunk_events, is built on
+:func:`global_row_number`):
 
 1. ``repartitionByRange`` on the order key — rows land in globally
    ordered, parallel range partitions;
@@ -21,9 +22,60 @@ where the range boundaries land.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 __all__ = ["global_row_number", "global_running_sum"]
+
+
+def _ranged(
+    df: DataFrame,
+    order_cols: list[str],
+    num_partitions: int | None,
+    *partials: Column,
+) -> tuple[DataFrame, dict]:
+    """The shared prelude: range-partition ``df`` on ``order_cols``, sort
+    within partitions, tag each row with its partition id ``_pid``, and
+    pin the ids to the data with an eager localCheckpoint (at 100 TB use
+    reliable checkpoint()/a persisted stage boundary instead — same call
+    site).  Returns (ranged frame, {pid: Row of ``partials``}) — the
+    partials are aggregated per partition and collected: one row per
+    partition, bounded independent of data size."""
+    if num_partitions is None:
+        n_conf = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
+        num_partitions = int(n_conf)
+    ranged = (
+        df.repartitionByRange(num_partitions, *order_cols)
+        .sortWithinPartitions(*order_cols)
+        .withColumn("_pid", F.spark_partition_id())
+        .localCheckpoint(eager=True)  # pin partition ids with the data
+    )
+    per_pid = {
+        r["_pid"]: r for r in ranged.groupBy("_pid").agg(*partials).collect()
+    }
+    return ranged, per_pid
+
+
+def _by_pid(values: dict, cast=None) -> Column:
+    """``values[_pid]`` as a Column: a literal map lookup over the
+    (bounded) partition ids, values optionally cast to ``cast``."""
+    def lit(v):
+        return F.lit(v) if cast is None else F.lit(v).cast(cast)
+
+    return F.element_at(
+        F.create_map(
+            *[c for pid in sorted(values) for c in (F.lit(pid), lit(values[pid]))]
+        ),
+        F.col("_pid"),
+    )
+
+
+def _earlier_sums(per_pid: dict, col: str) -> dict:
+    """{pid: sum of ``col`` over all EARLIER partitions} (NULL sums as 0)."""
+    offsets, acc = {}, 0
+    for pid in sorted(per_pid):
+        offsets[pid] = acc
+        acc += per_pid[pid][col] or 0
+    return offsets
 
 
 def global_row_number(
@@ -37,36 +89,15 @@ def global_row_number(
 
     Scale: the only global coordination is the per-partition-count
     collect (``num_partitions`` longs); everything row-wise stays
-    parallel.  The input is localCheckpointed once to pin partition ids
-    to the data (at 100 TB use reliable checkpoint()/a persisted stage
-    boundary instead — same call site).
+    parallel.
     """
-    if num_partitions is None:
-        n_conf = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        num_partitions = int(n_conf)
-    ranged = (
-        df.repartitionByRange(num_partitions, *order_cols)
-        .sortWithinPartitions(*order_cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)  # pin partition ids with the data
+    ranged, counts = _ranged(
+        df, order_cols, num_partitions, F.count("*").alias("cnt")
     )
-    counts = {
-        r["_pid"]: r["cnt"]
-        for r in ranged.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()
-    }
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    off_expr = F.element_at(
-        F.create_map(
-            *[F.lit(x) for pid in sorted(offsets) for x in (pid, offsets[pid])]
-        ),
-        F.col("_pid"),
-    )
+    offsets = _by_pid(_earlier_sums(counts, "cnt"))
     wp = Window.partitionBy("_pid").orderBy(*order_cols)
     return ranged.withColumn(
-        out_col, (F.row_number().over(wp) + off_expr).cast("long")
+        out_col, (F.row_number().over(wp) + offsets).cast("long")
     ).drop("_pid")
 
 
@@ -91,39 +122,17 @@ def global_running_sum(
     addition is associative (use only exact-typed columns here — float
     prefix sums would be boundary-dependent).
     """
-    if num_partitions is None:
-        n_conf = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        num_partitions = int(n_conf)
-    ranged = (
-        df.repartitionByRange(num_partitions, *order_cols)
-        .sortWithinPartitions(*order_cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)  # pin partition ids with the data
+    out, totals = _ranged(
+        df, order_cols, num_partitions, *[F.sum(c).alias(c) for c in sum_cols]
     )
-    totals = {
-        r["_pid"]: r
-        for r in ranged.groupBy("_pid")
-        .agg(*[F.sum(c).alias(c) for c in sum_cols])
-        .collect()
-    }
-    out = ranged
     wp = (
         Window.partitionBy("_pid")
         .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     for c in sum_cols:
-        offsets, acc = {}, 0
-        for pid in sorted(totals):
-            offsets[pid] = acc
-            acc += totals[pid][c] or 0
-        off_expr = F.element_at(
-            F.create_map(
-                *[F.lit(x) for pid in sorted(offsets) for x in (pid, offsets[pid])]
-            ),
-            F.col("_pid"),
-        )
-        out = out.withColumn(f"cum_{c}", (F.sum(c).over(wp) + off_expr).cast("long"))
+        offsets = _by_pid(_earlier_sums(totals, c))
+        out = out.withColumn(f"cum_{c}", (F.sum(c).over(wp) + offsets).cast("long"))
     return out.drop("_pid")
 
 
@@ -142,23 +151,13 @@ def global_running_max_excl(
     scheme as :func:`global_running_sum` (max is associative too):
     range-partition, partition-local exclusive running max, then fold in
     the max of all earlier partitions via one bounded collect."""
-    if num_partitions is None:
-        n_conf = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        num_partitions = int(n_conf)
-    ranged = (
-        df.repartitionByRange(num_partitions, *order_cols)
-        .sortWithinPartitions(*order_cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)  # pin partition ids with the data
+    ranged, totals = _ranged(
+        df, order_cols, num_partitions, F.max(max_col).alias("mx")
     )
-    totals = {
-        r["_pid"]: r["mx"]
-        for r in ranged.groupBy("_pid").agg(F.max(max_col).alias("mx")).collect()
-    }
     offsets, acc = {}, None
     for pid in sorted(totals):
         offsets[pid] = acc  # max over all EARLIER partitions (None if none)
-        t = totals[pid]
+        t = totals[pid]["mx"]
         acc = t if acc is None or (t is not None and t > acc) else acc
     wp = (
         Window.partitionBy("_pid")
@@ -166,19 +165,9 @@ def global_running_max_excl(
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     # cast offsets to max_col's own type: a hard 'long' cast would
-    # silently truncate double/decimal maxima
-    val_type = ranged.schema[max_col].dataType
-    off_expr = F.element_at(
-        F.create_map(
-            *[
-                c
-                for pid in sorted(offsets)
-                # explicit cast: the first partition's offset is None and
-                # a bare NULL literal would break map value-type inference
-                for c in (F.lit(pid), F.lit(offsets[pid]).cast(val_type))
-            ]
-        ),
-        F.col("_pid"),
-    )
+    # silently truncate double/decimal maxima; explicit cast also because
+    # the first partition's offset is None and a bare NULL literal would
+    # break map value-type inference
+    off_expr = _by_pid(offsets, cast=ranged.schema[max_col].dataType)
     local = F.max(max_col).over(wp)
     return ranged.withColumn(out_col, F.greatest(local, off_expr)).drop("_pid")

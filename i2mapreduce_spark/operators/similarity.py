@@ -247,7 +247,7 @@ def embedding_dedup_groups(spark: SparkSession, emb_df: DataFrame,
     # fixture-scale graphs are shallow; 12 min-label rounds covers any
     # component a 500-2000-node similarity graph produces (the oracle is
     # a true-fixpoint recursive CTE, so under-iterating would hash-fail)
-    comp = connected_components(edges, iters=12)
+    comp = connected_components(edges, iters=12).state
     return (
         comp.groupBy("label")
         .agg(F.count("*").alias("group_size"))

@@ -67,7 +67,9 @@ def q_iter_connected_components(spark, sf_dir):
     labeling).  Hash-checked against unrolled pointer-doubling CTEs in
     DuckDB (_cc_oracle_sql) plus a python propagation golden in tests."""
     load_tables(spark, sf_dir)
-    return algorithms.connected_components(spark.table("edges_pp"), iters=CC_ITERS)
+    return algorithms.connected_components(
+        spark.table("edges_pp"), iters=CC_ITERS
+    ).state
 
 
 def q_iter_kmeans(spark, sf_dir):
@@ -79,7 +81,7 @@ def q_iter_kmeans(spark, sf_dir):
     the assignment hashes identically; a numpy golden also covers it in
     tests/test_iterative.py."""
     load_tables(spark, sf_dir)
-    assign, _ = algorithms.kmeans(
+    assign, _, _ = algorithms.kmeans(
         spark, spark.table("embeddings"), k=KMEANS_K, iters=KMEANS_ITERS
     )
     return assign
@@ -498,10 +500,10 @@ def q_inc_cc_delta(spark, sf_dir):
     load_tables(spark, sf_dir)
     edges = spark.table("edges_pp").transform(checkpoint_without_stats)
     base = edges.filter((F.col("src") + F.col("dst")) % 7 != 0)
-    cold_labels = algorithms.connected_components(base, iters=CC_ITERS)
+    cold_labels = algorithms.connected_components(base, iters=CC_ITERS).state
     return algorithms.connected_components(
         edges, iters=CC_ITERS, init_labels=cold_labels
-    )
+    ).state
 
 
 def q_iter_triangle_count(spark, sf_dir):

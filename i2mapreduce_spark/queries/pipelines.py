@@ -110,7 +110,7 @@ def q_pipeline_split_leakage_safe(spark, sf_dir):
     edges = pairs.select(F.col("d1").alias("src"), F.col("d2").alias("dst")).unionAll(
         pairs.select(F.col("d2").alias("src"), F.col("d1").alias("dst"))
     )
-    labels = algorithms.connected_components(edges, iters=8)  # (node, label)
+    labels = algorithms.connected_components(edges, iters=8).state  # (node, label)
     with_cluster = d.join(
         labels.withColumnRenamed("node", "doc_id"), "doc_id", "left"
     ).withColumn("cluster", F.coalesce(F.col("label"), F.col("doc_id")))

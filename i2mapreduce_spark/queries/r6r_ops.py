@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import Window, functions as F
 
 from ..catalog import cte, load_tables
+from ..operators import algorithms
 from ..plans.iterate import checkpoint_without_stats
 
 #: Supertrend parameters
@@ -206,38 +207,36 @@ def q_iter_katz_centrality(spark, sf_dir):
     fixed-point: x' = UNIT + (2·Σ_in x + DEN) div (2·DEN) per node
     (alpha = 1/20 exact), 4 synchronous sweeps from x = UNIT — integer
     sums are order-free-exact, so unlike float PageRank there is no
-    reduction-order hazard anywhere.  Each sweep is one co-partitioned
-    join + hash agg (the GIM-V shape); the DuckDB oracle unrolls the
-    same 4 sweeps."""
+    reduction-order hazard anywhere.  The sweeps run on algorithms.gimv
+    (combine2 = v, combineAll = sum, assign = the fixed-point update),
+    checkpointed every sweep; the DuckDB oracle unrolls the same 4
+    sweeps."""
     load_tables(spark, sf_dir)
     edges = spark.table("edges_pp").transform(checkpoint_without_stats)
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .transform(checkpoint_without_stats)
+    x0 = algorithms._nodes(edges).select(
+        "node", F.lit(KATZ_UNIT).cast("long").alias("val")
     )
-    x = nodes.select("node", F.lit(KATZ_UNIT).cast("long").alias("x"))
-    for _ in range(KATZ_ITERS):
-        msg = (
-            x.join(edges, x.node == edges.src)
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("x").alias("s"))
-        )
-        x = (
-            nodes.join(msg, "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(KATZ_UNIT)
-                    + F.expr(
-                        f"(2 * coalesce(s, 0) + {KATZ_DEN}) div {2 * KATZ_DEN}"
-                    )
-                ).cast("long").alias("x"),
+    res = algorithms.gimv(
+        edges,
+        x0,
+        combine2=lambda _w, v: v,
+        combine_all=F.sum,
+        assign=lambda _v, agg: (
+            F.lit(KATZ_UNIT)
+            + F.call_function(
+                "div",
+                2 * F.coalesce(agg, F.lit(0)) + KATZ_DEN,
+                F.lit(2 * KATZ_DEN),
             )
-            .transform(checkpoint_without_stats)
-        )
-    return x.select("node", "x", F.round(F.col("x") / KATZ_UNIT, 6).alias("katz"))
+        ).cast("long"),
+        iters=KATZ_ITERS,
+        checkpoint_every=1,
+    )
+    return res.state.select(
+        "node",
+        F.col("val").alias("x"),
+        F.round(F.col("val") / KATZ_UNIT, 6).alias("katz"),
+    )
 
 
 QUERIES = {

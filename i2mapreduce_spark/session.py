@@ -18,6 +18,7 @@ Scale notes (100 TB deployment):
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
@@ -38,19 +39,33 @@ SQL_CONFS = {
 }
 
 
+#: conf names whose failed set has already been warned about — load_tables
+#: calls configure_session for every query, so each failure warns once
+#: per process
+_WARNED_CONFS: set[str] = set()
+
+
 def configure_session(spark: SparkSession, shuffle_partitions: int | None = None) -> SparkSession:
-    """Apply the engine's runtime confs to an existing session (idempotent)."""
-    for k, v in SQL_CONFS.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass  # non-settable on this build — keep going, features degrade
+    """Apply the engine's runtime confs to an existing session (idempotent).
+
+    A conf this session refuses (e.g. a static conf on a harness-built
+    session) is skipped with a RuntimeWarning naming the conf and the
+    error — the features it backs degrade instead of the setup failing."""
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("I2MR_SHUFFLE_PARTITIONS", "32"))
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    except Exception:
-        pass
+    confs = {**SQL_CONFS, "spark.sql.shuffle.partitions": str(shuffle_partitions)}
+    for k, v in confs.items():
+        try:
+            spark.conf.set(k, v)
+        except Exception as exc:
+            if k not in _WARNED_CONFS:
+                _WARNED_CONFS.add(k)
+                warnings.warn(
+                    f"configure_session: could not set {k}={v!r} "
+                    f"({type(exc).__name__}: {exc})",
+                    RuntimeWarning,
+                    stacklevel=2,
+                )
     return spark
 
 

@@ -28,6 +28,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from ..operators.ranking import global_row_number
+
 __all__ = [
     "MRBGStore",
     "chunk_events",
@@ -48,39 +50,21 @@ def chunk_events(
 
     Deterministic: exact ntile semantics over the total order
     (ts, event_id) — but computed WITHOUT a single-partition global
-    window.  The global rank of each row is per-partition row_number
-    (parallel) plus the cumulative count of earlier range partitions
-    (n_partitions scalars collected to the driver — bounded).  Because
-    (ts, event_id) is a unique total order, the rank — and therefore the
-    chunk — is independent of where the range boundaries land, so the
-    assignment is bit-identical to the old global-ntile one.  With
+    window: the global rank is operators.ranking.global_row_number
+    (per-partition row_number plus the count of earlier range
+    partitions — bounded Spark-driver state).  Because (ts, event_id) is a
+    unique total order, the rank — and therefore the chunk — is
+    independent of where the range boundaries land, so the assignment
+    is bit-identical to the old global-ntile one.  With
     `late_every` set, events from the FIRST chunk whose event_id is
     divisible by it are displaced into the LAST chunk — out-of-order
     "late" arrivals for watermark tests.
     """
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    ranged = (
-        events.repartitionByRange(n_part, "ts", "event_id")
-        .sortWithinPartitions("ts", "event_id")
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)  # pin partition ids with the data
-    )
-    counts = dict(
-        (r["_pid"], r["cnt"])
-        for r in ranged.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()
-    )
-    total = sum(counts.values())
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    off_expr = F.element_at(
-        F.create_map(*[F.lit(x) for pid in sorted(offsets)
-                       for x in (pid, offsets[pid])]),
-        F.col("_pid"),
-    )
-    wp = Window.partitionBy("_pid").orderBy("ts", "event_id")
-    rank = (F.row_number().over(wp) - 1 + off_expr).cast("long")
+    ranked = global_row_number(events, ["ts", "event_id"], out_col="_i")
+    # a scan of the pinned range partitions: the unread rank window is
+    # pruned from the count's plan
+    total = ranked.count()
+    rank = F.col("_i") - 1
     # exact ntile(n) from the 0-based global rank: the first (total % n)
     # tiles get ceil(total/n) rows, the rest floor(total/n)
     q, rem = divmod(total, n)
@@ -88,7 +72,7 @@ def chunk_events(
     chunk = F.when(rank < big, (rank / (q + 1)).cast("int")).otherwise(
         (F.lit(rem) + (rank - big) / q).cast("int") if q else F.lit(n - 1)
     )
-    tiled = ranged.withColumn("_chunk", chunk).drop("_pid")
+    tiled = ranked.withColumn("_chunk", chunk).drop("_i")
     if late_every:
         tiled = tiled.withColumn(
             "_chunk",
@@ -99,6 +83,22 @@ def chunk_events(
         )
     tiled = tiled.localCheckpoint(eager=True)  # pin the tiling
     return [tiled.filter(F.col("_chunk") == i).drop("_chunk") for i in range(n)]
+
+
+def _land_chunk(chunk: DataFrame, src_dir: str, i: int) -> None:
+    """Land `chunk` as arrival `i` of a file-source stream: write it to a
+    stage dir, then move its part files flat into `src_dir` — a
+    `chunk=i` subdir would be inferred as a partition column and break
+    the stream's fixed schema."""
+    stage = os.path.join(src_dir, f"_stage_{i}")
+    chunk.write.parquet(stage)
+    for j, f in enumerate(sorted(os.listdir(stage))):
+        if f.endswith(".parquet"):
+            os.rename(
+                os.path.join(stage, f),
+                os.path.join(src_dir, f"chunk-{i}-{j}.parquet"),
+            )
+    shutil.rmtree(stage, ignore_errors=True)
 
 
 def stream_over_chunks(
@@ -132,18 +132,7 @@ def stream_over_chunks(
         )
         try:
             for i, chunk in enumerate(chunks):
-                # stage then move part-files in flat: a `chunk=i` subdir
-                # would be inferred as a partition column and break the
-                # stream's fixed schema
-                stage = os.path.join(src_dir, f"_stage_{i}")
-                chunk.write.parquet(stage)
-                for j, f in enumerate(sorted(os.listdir(stage))):
-                    if f.endswith(".parquet"):
-                        os.rename(
-                            os.path.join(stage, f),
-                            os.path.join(src_dir, f"chunk-{i}-{j}.parquet"),
-                        )
-                shutil.rmtree(stage, ignore_errors=True)
+                _land_chunk(chunk, src_dir, i)
                 q.processAllAvailable()
         finally:
             q.stop()
@@ -177,15 +166,7 @@ def stream_over_chunks_foreach(
         )
         try:
             for i, chunk in enumerate(chunks):
-                stage = os.path.join(src_dir, f"_stage_{i}")
-                chunk.write.parquet(stage)
-                for j, f in enumerate(sorted(os.listdir(stage))):
-                    if f.endswith(".parquet"):
-                        os.rename(
-                            os.path.join(stage, f),
-                            os.path.join(src_dir, f"chunk-{i}-{j}.parquet"),
-                        )
-                shutil.rmtree(stage, ignore_errors=True)
+                _land_chunk(chunk, src_dir, i)
                 q.processAllAvailable()
         finally:
             q.stop()
@@ -224,17 +205,8 @@ def stream_over_two_sources(
         try:
             for i in range(max(len(left_chunks), len(right_chunks))):
                 for chunks, d in ((left_chunks, dirs[0]), (right_chunks, dirs[1])):
-                    if i >= len(chunks):
-                        continue
-                    stage = os.path.join(d, f"_stage_{i}")
-                    chunks[i].write.parquet(stage)
-                    for j, f in enumerate(sorted(os.listdir(stage))):
-                        if f.endswith(".parquet"):
-                            os.rename(
-                                os.path.join(stage, f),
-                                os.path.join(d, f"chunk-{i}-{j}.parquet"),
-                            )
-                    shutil.rmtree(stage, ignore_errors=True)
+                    if i < len(chunks):
+                        _land_chunk(chunks[i], d, i)
                 q.processAllAvailable()
         finally:
             q.stop()

@@ -110,7 +110,8 @@ def test_connected_components_matches_union_find(spark, raw_edges):
     sym = list({(a, b) for a, b in raw_edges} | {(b, a) for a, b in raw_edges})
     edges = spark.createDataFrame(sym, "src long, dst long")
     got = {
-        (r.node, r.label) for r in connected_components(edges, iters=16).collect()
+        (r.node, r.label)
+        for r in connected_components(edges, iters=16).state.collect()
     }
 
     parent = {}

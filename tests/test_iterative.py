@@ -52,7 +52,9 @@ def test_pagerank_matches_golden(spark, sf_dir, edges_cp):
 
 
 def test_connected_components_matches_golden(spark, sf_dir, edges_pp):
-    labels_df = algorithms.connected_components(spark.table("edges_pp"), iters=8)
+    labels_df = algorithms.connected_components(
+        spark.table("edges_pp"), iters=8
+    ).state
     got = {r.node: r.label for r in labels_df.collect()}
     nodes = sorted({u for u, _ in edges_pp} | {v for _, v in edges_pp})
     labels = {x: x for x in nodes}
@@ -83,7 +85,7 @@ def test_kmeans_matches_golden(spark, sf_dir):
                 C[c] = X[a == c].mean(axis=0)
     want = dict(zip(ids.tolist(), a.tolist()))
 
-    assign, _c = algorithms.kmeans(spark, emb, k=k, iters=iters)
+    assign, _c, _n = algorithms.kmeans(spark, emb, k=k, iters=iters)
     got = {r.vec_id: r.cluster for r in assign.collect()}
     diff = {i for i in want if want[i] != got.get(i)}
     assert not diff, f"kmeans assignment mismatch on {len(diff)} points: {sorted(diff)[:5]}"
@@ -136,16 +138,15 @@ def test_kmeans_warmstart_converges_faster(spark, sf_dir):
     delta = emb.filter(F.col("vec_id") % 50 != 0)  # drop 2% of points
     tol, iters = 0.01, 25
 
-    _, c_cold = algorithms.kmeans(spark, emb, k=10, iters=iters, tol=tol)
-    cold_iters = algorithms.kmeans.last_iters_run
+    _, c_cold, cold_iters = algorithms.kmeans(
+        spark, emb, k=10, iters=iters, tol=tol
+    )
     assert cold_iters < iters  # converged, not capped
 
-    algorithms.kmeans(spark, delta, k=10, iters=iters, tol=tol)
-    cold2_iters = algorithms.kmeans.last_iters_run
-    algorithms.kmeans(
+    _, _, cold2_iters = algorithms.kmeans(spark, delta, k=10, iters=iters, tol=tol)
+    _, _, warm_iters = algorithms.kmeans(
         spark, delta, k=10, iters=iters, tol=tol, init_centroids=c_cold
     )
-    warm_iters = algorithms.kmeans.last_iters_run
     assert warm_iters < cold2_iters, f"warm {warm_iters} vs cold {cold2_iters}"
 
 
@@ -216,15 +217,18 @@ def test_cc_warmstart_converges_faster(spark, sf_dir):
     base = full.filter((F.col("src") + F.col("dst")) % 5 != 0)
     assert base.count() < full.count()
 
-    cold_base = algorithms.connected_components(base, iters=16)
+    cold_base = algorithms.connected_components(base, iters=16).state
     cold_base = cold_base.localCheckpoint(eager=True)
 
-    warm = algorithms.connected_components(full, iters=16, init_labels=cold_base)
-    warm_iters = algorithms.connected_components.last_iters_run
-    warm = warm.localCheckpoint(eager=True)
+    warm_res = algorithms.connected_components(
+        full, iters=16, init_labels=cold_base
+    )
+    warm_iters = warm_res.iterations
+    warm = warm_res.state.localCheckpoint(eager=True)
 
-    cold_full = algorithms.connected_components(full, iters=16)
-    cold_iters = algorithms.connected_components.last_iters_run
+    cold_res = algorithms.connected_components(full, iters=16)
+    cold_iters = cold_res.iterations
+    cold_full = cold_res.state
 
     got = {(r.node, r.label) for r in warm.collect()}
     want = {(r.node, r.label) for r in cold_full.collect()}

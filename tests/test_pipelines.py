@@ -38,7 +38,7 @@ def test_split_never_separates_near_dups(spark, sf_dir):
     edges = pairs.select(F.col("d1").alias("src"), F.col("d2").alias("dst")).unionAll(
         pairs.select(F.col("d2").alias("src"), F.col("d1").alias("dst"))
     )
-    labels = algorithms.connected_components(edges, iters=8)
+    labels = algorithms.connected_components(edges, iters=8).state
     lab = {r.node: r.label for r in labels.collect()}
     pr = pairs.collect()
     assert len(pr) > 0, "fixtures must contain planted near-dup pairs"
